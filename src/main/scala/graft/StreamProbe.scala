@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (the [[Explain]] of the streaming fixtures): run ONE
   * streaming query end-to-end `runs` times, timing each invocation,
   * and dump the last run's per-micro-batch progress — triggerExecution
@@ -15,14 +13,7 @@ object StreamProbe {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     (1 to runs).foreach { i =>
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir)

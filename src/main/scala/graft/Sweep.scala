@@ -34,15 +34,15 @@ object Sweep {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** [[Session]] at `cores`, with shuffle partitions pinned at 32 for
+    * every core count (see the `cores` mode).
+    */
   private def freshSession(cores: Int): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session(cores)
+    spark.conf.set("spark.sql.shuffle.partitions", 32L)
+    spark
   }
 
   def main(args: Array[String]): Unit = {
@@ -51,9 +51,8 @@ object Sweep {
       case "grid" =>
         val corpus =
           if (args.length > 1) args(1) else "/root/reference/file_chunks_130"
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+        val cpus = Session.cpus
         val spark = freshSession(cpus)
-        spark.sparkContext.setLogLevel("WARN")
         timedRun(spark, corpus) // warm JVM + FS cache once
         for {
           shufflePartitions <- Seq(4, 8, 16, 32, 64)
@@ -79,7 +78,6 @@ object Sweep {
         // likewise pins reduce threads at 10 while sweeping processes).
         for (corpus <- corpora; cores <- Seq(1, 2, 4, 8, 16, 32)) {
           val spark = freshSession(cores)
-          spark.sparkContext.setLogLevel("WARN")
           timedRun(spark, corpus) // warm this session's scheduler + cache
           val secs = (1 to 3).map(_ => timedRun(spark, corpus)).min
           val chunks = corpus.replaceAll(".*_", "")

@@ -80,24 +80,6 @@ object WordCount {
       graft.functions.NormalizeWord(
         org.apache.spark.sql.graft.Bridge.expression(tok)))
 
-  /** Same semantics from Spark built-ins only (three string scans vs the
-    * custom expression's one; kept as a cross-check in tests and as the
-    * pattern a built-ins-only deployment would use).
-    *
-    * `translate`, NOT `lower`: the C code lowercases bytes 'A'-'Z' only
-    * (`mpi_mapreduce.c:138`), whereas `lower()` is Unicode-aware and
-    * would also fold e.g. 'É'→'é' inside all-non-alpha tokens, merging
-    * keys the reference keeps distinct (observed: 5 of the 50,059
-    * distinct words in file_chunks_130 merge under unicode lower).
-    */
-  def normalizeBuiltin(tok: Column): Column = {
-    val lowered = translate(tok,
-      "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz")
-    when(lowered.rlike("[a-z]"),
-      regexp_replace(lowered, "^[^a-z]+|[^a-z]+$", ""))
-      .otherwise(lowered)
-  }
-
   /** Reference-exact normalize on JVM strings (chars stand in for the C
     * signed bytes: any codepoint outside ASCII letters is "non-alpha",
     * matching the signed-char comparison at `mpi_mapreduce.c:139-141`).

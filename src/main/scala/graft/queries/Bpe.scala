@@ -140,19 +140,14 @@ object Bpe {
     }
     // a corpus of single-character words exhausts before the first
     // merge — callers still get a rules frame, just an empty one
-    (Option(rules).getOrElse(emptySeqRules(wf)), wf)
+    (Option(rules).getOrElse(emptyRules(wf)), wf)
   }
 
-  /** Zero-row rule frames with the trainers' output schemas, for the
-    * nothing-ever-merged case (every word already one symbol).
+  /** Zero-row (step, l, r, cnt) rule frame, for the nothing-ever-merged
+    * case (every word already one symbol) of both trainers.
     */
-  private def emptySeqRules(wf: DataFrame): DataFrame =
+  private def emptyRules(wf: DataFrame): DataFrame =
     pairCounts(wf).withColumn("step", lit(1)).limit(0)
-  private def emptyBatchRules(wf: DataFrame): DataFrame =
-    pairCounts(wf)
-      .select(lit(1).cast("int").as("step"), col("l"), col("r"), col("cnt"),
-        lit(1).as("round"))
-      .limit(0)
 
   /** Max merges per batched round ([[trainStateBatched]]) and the
     * ranked-window width the batch is selected from. The window is the
@@ -255,10 +250,8 @@ object Bpe {
     var wf = wordFreq(d).localCheckpoint(eager = true)
     var rules: DataFrame = null
     var done = 0L
-    var round = 0
     var exhausted = false
     while (done < merges && !exhausted) {
-      round += 1
       val room = math.min(maxBatch.toLong, merges - done).toInt
       // ranked window: TakeOrdered, then ONE bounded array in a 1-row
       // frame (struct sorts by field order; -cnt first = rank order)
@@ -300,10 +293,7 @@ object Bpe {
         .select(posexplode(col("batch")).as(Seq("i", "p")))
         .select((col("i") + lit(done + 1)).cast("int").as("step"),
           col("p")("l").as("l"), col("p")("r").as("r"),
-          col("p")("cnt").as("cnt"),
-          // which batched round produced the rule — dropped by the
-          // gated projection, read by ScaleStudy's bpe_merges study
-          lit(round).as("round"))
+          col("p")("cnt").as("cnt"))
       val nMerged = roundRules.count()
       if (nMerged == 0) {
         // every word collapsed to one symbol — nothing left to merge
@@ -321,7 +311,7 @@ object Bpe {
       }
     }
     // same nothing-ever-merged contract as [[trainState]]
-    (Option(rules).getOrElse(emptyBatchRules(wf)), wf)
+    (Option(rules).getOrElse(emptyRules(wf)), wf)
   }
 
   /** Gate config for the vocab histogram: top 100 subwords (the gate

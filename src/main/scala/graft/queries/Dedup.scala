@@ -1805,10 +1805,13 @@ object Dedup extends QueryModule {
     // (ddMinhashLsh's internal stage was released before contam's
     // action fired). Same settle/release discipline as [[settled]]'s
     // other callers: the pipeline's own manifest is the only cached
-    // frame left behind.
+    // frame left behind — so the frame released is the one
+    // minhashLshFrom persisted, not a projection of it (unpersist on a
+    // projection is a no-op).
     val staged = shingled(s, dir).select(col("doc_id"), col("sh")).persist()
     staged.count()
-    val pairs = minhashLshFrom(staged).select("doc_a", "doc_b", "jaccard")
+    val lsh = minhashLshFrom(staged)
+    val pairs = lsh.select("doc_a", "doc_b", "jaccard")
     val lexHits = contam(staged, broadcastTest = false)
       .select(col("doc_id"), col("contam_ratio"))
     val sem = contamEmbed(Tables(s, dir).embeddings, ContamBothEvalMod)
@@ -1816,7 +1819,7 @@ object Dedup extends QueryModule {
     settled(
       pipelineCore(graft.core.FanOut(Tables(s, dir).documents), pairs,
         lexHits, sem, PipelineDomainQuota),
-      staged, pairs)
+      staged, lsh)
   }
 
   /** Core of [[ddPipelineManifest]] over explicit stage inputs, so the

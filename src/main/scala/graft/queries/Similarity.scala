@@ -390,7 +390,7 @@ object Similarity extends QueryModule {
   /** The CAPPED k-NN join under the hash gate — the skew discipline
     * that makes [[simKnnJoin]] production-shaped ([[KnnCandCap]]
     * sample on cells past the 4×-mean trigger), promoted from a
-    * ScaleStudy-only measurement to an oracled query, the same
+    * scale-study-only measurement to an oracled query, the same
     * treatment [[Dedup.ddSemdedupCapped]] gave SemDeDup's cell cap.
     *
     * The gate corpus is near-balanced (16 trained cells over 500
@@ -436,8 +436,9 @@ object Similarity extends QueryModule {
     * across decades.
     */
   /** Candidate cap for the SKEW-PROOF k-NN-join configuration
-    * (ScaleStudy's `knn_join_capped`): a home cell over this size
-    * offers only its [[KnnCandCap]] smallest-md5-coin members as
+    * (gated as `sim_knn_join_capped`; decades in BENCH_knncap_r9.jsonl):
+    * a home cell over this size offers only its [[KnnCandCap]]
+    * smallest-md5-coin members as
     * NEIGHBOR CANDIDATES (every vector still gets ranked output — the
     * cap restricts the join's right side, not its left). The coin is
     * similarity-oblivious, so the bound holds REGARDLESS of geometry —
@@ -448,7 +449,7 @@ object Similarity extends QueryModule {
     * drops by design while COSINE quality barely moves on clustered
     * data (tight clusters are mutually similar — any sample member is
     * a good neighbor). Both numbers are measured, not asserted
-    * (BENCH_NOTES round-9 capped-join study).
+    * (BENCH_NOTES round-9 capped-join study, BENCH_knncap_r9.jsonl).
     */
   private[graft] val KnnCandCap = 256
 

@@ -166,8 +166,9 @@ object AdmitterBase {
   * NONE of its bands collide (the read-back aggregate counts per-doc
   * collisions; `st_lsh_dedup` gates it). State grows with DISTINCT
   * content inside the horizon, not with event volume — the property
-  * the stream_shapes `lsh` row measures at ×10/×100. All admission
-  * semantics live in [[AdmitterBase]].
+  * the stream_shapes `lsh` row measured at ×10/×100
+  * (BENCH_streamshapes_r11.jsonl). All admission semantics live in
+  * [[AdmitterBase]].
   */
 class LshAdmitter(horizonMs: Long)
     extends AdmitterBase[LshBandEvent, LshAdmit](horizonMs) {

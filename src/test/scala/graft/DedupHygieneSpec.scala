@@ -38,6 +38,10 @@ class DedupHygieneSpec extends SparkSpec {
     assertHygiene("ddEmbedLsh")(Dedup.ddEmbedLsh(spark, sfDir))
   }
 
+  test("ddPipelineManifest releases the shared shingle and LSH caches; only the result stays") {
+    assertHygiene("ddPipelineManifest")(Dedup.ddPipelineManifest(spark, sfDir))
+  }
+
   test("repeated builder calls do not accumulate intermediate residents") {
     spark.catalog.clearCache()
     val before = spark.sparkContext.getPersistentRDDs.keySet
